@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS]. The last stdout line is the full JSON
+record, after a compact one without the per-query map:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query runs $SPARK_GRAFT_BENCH_REPEATS times (default 3) and the
@@ -270,18 +271,10 @@ def main() -> None:
         f.write("\n")
     with open(os.path.join(here, "BENCH_HISTORY.jsonl"), "a") as f:
         f.write(json.dumps(full, separators=(",", ":")) + "\n")
-    # compact separators keep the driver-parsed line as small as the
-    # contract allows (the bounded tail was cutting the pretty form)
-    print(json.dumps(out, separators=(",", ":")))
-    # Tail-survivable compact record (VERDICT r14 'what's wrong' 1 /
-    # next-round item 1): the full line above is ~6 KB (149-query map)
-    # and a bounded tail capture decapitated it in BOTH the r12 and r13
-    # artifacts, costing PERF its per-query round-over-round two rounds
-    # running. This final line is ~200 bytes — whatever tail the driver
-    # keeps always ends with a parseable record carrying the headline
-    # total + the commit anchor. Marked "compact" and carrying the SAME
-    # metric/value as the full line; consumers that want per-query data
-    # parse the full line (or BENCH_FULL_latest.json / BENCH_HISTORY).
+    # Compact record: a ~200-byte line with the headline total + the
+    # commit anchor, for a bounded tail capture that cuts the ~6 KB full
+    # line. It prints first, so the last stdout line (the one parsed as
+    # the result) is the full record with its per-query map.
     compact = {
         "metric": out["metric"],
         "value": out["value"],
@@ -294,6 +287,9 @@ def main() -> None:
         "compact": True,
     }
     print(json.dumps(compact, separators=(",", ":")))
+    # compact separators keep the parsed line as small as the contract
+    # allows
+    print(json.dumps(out, separators=(",", ":")))
 
 
 def _git_state(repo_dir: str) -> tuple[str, bool]:

@@ -19,9 +19,10 @@ equivalent. The deliberate differences from a naive UDF:
    one vectorized einsum), no per-row Python;
  * float summation order is numpy's pairwise reduction — NOT Spark's
    left-to-right fold, so results match the codegen path to ~1e-12
-   relative, not bit-for-bit. Anything needing engine-exact floats
-   (the DuckDB oracle gate) must stay on the expression path; that is
-   WHY the oracled queries never route through UDFs.
+   relative, not bit-for-bit. Engine-exact floats (the DuckDB oracle
+   gate) need Spark's fold order: either the expression path or numpy
+   that folds left to right from 0.0 the same way, as
+   operators/recommend.topk_by_cosine does.
 """
 
 # NO `from __future__ import annotations` here: pyspark resolves the

@@ -1255,10 +1255,10 @@ class KGERecommender(Recommender):
         self.all_recs = all_recs
         self.model_name, self.k, self.dim = model, k, dim
         self.epochs, self.lr, self.margin, self.seed = epochs, lr, margin, seed
-        self.scoring = scoring  # "exact" (parity) | "lsh" (scale)
+        self.scoring = scoring  # "exact" (driver kernel) | "lsh" (scale)
         self.n_negatives = n_negatives
         self.adversarial_alpha = adversarial_alpha
-        assert scoring in ("exact", "lsh", "broadcast"), scoring
+        assert scoring in ("exact", "lsh"), scoring
         # "driver" = reference-parity single-node SGD (triples collect,
         # guarded); "partitioned" = distributed partition-wise SGD —
         # triples never leave the cluster (train_kge_partitioned);
@@ -1334,10 +1334,4 @@ class KGERecommender(Recommender):
             from .recommend import topk_by_cosine_lsh
 
             return topk_by_cosine_lsh(uv, iv, k=k, train=train)
-        if self.scoring == "broadcast":
-            from .recommend import topk_by_cosine_broadcast
-
-            return topk_by_cosine_broadcast(
-                uv, iv, k=k, train=train, all_recs=self.all_recs
-            )
         return topk_by_cosine(uv, iv, k=k, train=train, all_recs=self.all_recs)

@@ -18,9 +18,10 @@ Entities absent from the walk vocabulary (Word2Vec minCount prunes
 them) get zero vectors, matching the reference's zero-fill
 (``transE/model.py:111-135``).
 
-Scale: walks + Word2Vec are both distributed; the exact cosine path is
-the parity/small path — swap in similarity.cosine_lsh_topk for the
-100 TB candidate-generation plan.
+Scale: walks + Word2Vec are both distributed; exact cosine scoring runs
+on the driver over the collected, bounded vectors (Word2VecModel
+already holds them there) — ``scoring="lsh"`` is the 100 TB
+candidate-generation plan.
 """
 
 from __future__ import annotations
@@ -74,9 +75,8 @@ class Node2VecRecommender(Recommender):
                 "same-bucket candidates, so it cannot rank EVERY item"
             )
         self.all_recs = all_recs
-        # "exact" (parity) | "lsh" (scale) | "broadcast" (exact,
-        # zero-shuffle scoring for bounded item catalogs)
-        assert scoring in ("exact", "lsh", "broadcast"), scoring
+        # "exact" (driver kernel, bounded vectors) | "lsh" (scale)
+        assert scoring in ("exact", "lsh"), scoring
         self.scoring = scoring
         self.k = k
         self.n_walks = n_walks
@@ -173,10 +173,4 @@ class Node2VecRecommender(Recommender):
             from .recommend import topk_by_cosine_lsh
 
             return topk_by_cosine_lsh(uv, iv, k=k, train=train_str)
-        if self.scoring == "broadcast":
-            from .recommend import topk_by_cosine_broadcast
-
-            return topk_by_cosine_broadcast(
-                uv, iv, k=k, train=train_str, all_recs=self.all_recs
-            )
         return topk_by_cosine(uv, iv, k=k, train=train_str, all_recs=self.all_recs)

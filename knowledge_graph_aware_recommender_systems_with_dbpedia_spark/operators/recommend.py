@@ -1,7 +1,7 @@
 """Recommenders: popularity baseline + embedding cosine top-k scoring.
 
-The scoring path reproduces the reference's over-fetch + anti-join +
-truncate pattern exactly (``deep_walk_based/model.py:62-86``):
+Every scorer keeps the reference's over-fetch + anti-join + truncate
+contract (``deep_walk_based/model.py:62-86``):
 
  1. over-fetch ``n = min(max_user_degree + k, n_items)`` candidates
     per user (guarantees >= k remain after excluding rated items);
@@ -9,16 +9,22 @@ truncate pattern exactly (``deep_walk_based/model.py:62-86``):
  3. keep the first k by score (O4).
 
 Scale: the popularity candidate set is tiny (top-n global items) and
-broadcast; the cosine path normalizes once, and the exact variant is a
-blocked crossJoin kept for parity/small-dims — the scale path is
-MLlib ``BucketedRandomProjectionLSH`` (see similarity.py) or an IVF
-prefilter.
+broadcast. Exact cosine top-k is the O(U x I) small regime: the
+embedding vectors are bounded and already live on the driver, so
+:func:`topk_by_cosine` collects them and scores them in one numpy
+kernel, bit-exact to the engine's fold order. The scale path is
+sign-LSH bucketed candidates (:func:`topk_by_cosine_lsh`, see
+similarity.py) or an IVF prefilter.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def salted_join(
@@ -207,7 +213,7 @@ def topk_by_cosine_lsh(
     n_tables: int = 1,
 ) -> DataFrame:
     """The 100 TB scoring path: sign-LSH bucketed candidate generation
-    instead of the exact O(U x I) crossJoin (same over-fetch ->
+    instead of exact O(U x I) scoring (same over-fetch ->
     anti-join -> truncate contract as topk_by_cosine; approximate —
     recall is tuned by n_planes per table and OR-amplified by
     n_tables — see similarity.cosine_lsh_topk).
@@ -235,87 +241,61 @@ def topk_by_cosine_lsh(
     return exclude_rated_and_truncate(scored, train, k)
 
 
-def topk_by_cosine_broadcast(
-    user_vecs: DataFrame,
-    item_vecs: DataFrame,
-    k: int,
-    train: DataFrame,
-    all_recs: bool = False,
-) -> DataFrame:
-    """Exact cosine top-k with a BROADCAST item array — the zero-shuffle
-    exact plan for bounded item catalogs (the dim-table assumption the
-    popularity recommender already documents).
 
-    Row-for-row identical to :func:`topk_by_cosine` (unit-tested): per
-    user, every item is scored (same zip_with/aggregate dot, same
-    bits), sorted by (score desc, item asc) INSIDE an array via the
-    NATURAL struct sort on (-score, item) — comparator-lambda
-    array_sort is interpreted per comparison and an order of magnitude
-    slower — then rated items are removed with order-preserving
-    ``array_except`` (== anti-join after over-fetch) and the first k
-    kept. No scored-pairs table, no per-user shuffle, no sort-merge
-    anti-join: the only shuffles feed the two tiny aggregates.
+# users scored per kernel block: bounds the (block x items) score matrix
+_USER_BLOCK = 256
 
-    Scope: wins when the item catalog is SMALL (≲ a few thousand —
-    per-row cost is |items| inside higher-order functions, which don't
-    whole-stage-codegen). Measured at sf0.1 (15k users x 20k items)
-    the windowed :func:`topk_by_cosine` is faster; at popularity-size
-    candidate arrays this shape is the fastest exact plan. Use
-    windowed or LSH for unbounded catalogs.
-    """
-    def normed(df: DataFrame, idc: str) -> DataFrame:
-        staged = df.select(
-            idc,
-            "vec",
-            F.sqrt(F.aggregate("vec", F.lit(0.0), lambda a, x: a + x * x)).alias("_norm"),
-        )
-        return staged.select(
-            idc,
-            F.when(
-                F.col("_norm") > 0,
-                F.transform("vec", lambda x: x / F.col("_norm")),
-            ).otherwise(F.col("vec")).alias("vec"),
-        )
 
-    items_arr = normed(item_vecs, "item_id").agg(
-        F.collect_list(F.struct(F.col("item_id").alias("i"), F.col("vec").alias("iv"))).alias("items")
-    )
-    item_t = dict(train.dtypes)["item_id"]
-    rated = train.groupBy("user_id").agg(F.collect_set("item_id").alias("rated"))
-    u = normed(user_vecs, "user_id").join(rated, "user_id", "left").select(
-        "user_id",
-        "vec",
-        F.coalesce("rated", F.array().cast(f"array<{item_t}>")).alias("rated"),
-    )
-    scored = u.join(F.broadcast(items_arr)).select(
-        "user_id",
-        "rated",
-        # natural struct sort on (-score, item) == (score desc, item
-        # asc): the codegen'd ordering, no interpreted comparator
-        F.array_sort(
-            F.transform(
-                "items",
-                lambda s: F.struct(
-                    (
-                        -F.aggregate(
-                            F.zip_with(F.col("vec"), s["iv"], lambda a, b: a * b),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ).alias("ns"),
-                    s["i"].alias("i"),
-                ),
-            )
-        ).alias("cand"),
-    )
-    unseen = F.array_except(F.transform("cand", lambda s: s["i"]), "rated")
-    picked = scored.select(
-        "user_id",
-        (unseen if all_recs else F.slice(unseen, 1, k)).alias("recs"),
-    )
-    return picked.select(
-        "user_id", F.posexplode("recs").alias("_p", "item_id")
-    ).select("user_id", "item_id", (F.col("_p") + 1).alias("rank"))
+def _collect_vecs(df: DataFrame, id_col: str) -> tuple[pa.Array, np.ndarray]:
+    """(ids, (n, dim) vectors) of ``df`` through Arrow; float vectors
+    stay float32, as the engine squares them in their own type."""
+    t = df.select(id_col, "vec").toArrow()
+    vec = t.column("vec").combine_chunks()
+    lengths = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
+    dim = int(lengths[0]) if len(vec) else 0
+    values = vec.flatten()
+    if vec.null_count or values.null_count or (lengths != dim).any():
+        raise ValueError(f"{id_col} vectors must be non-null arrays of one length")
+    dtype = np.float32 if values.type == pa.float32() else np.float64
+    mat = values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    return t.column(id_col).combine_chunks(), mat.reshape(len(vec), dim)
+
+
+def _l2_normalised(v: np.ndarray) -> np.ndarray:
+    """Rows over their norm ``sqrt(aggregate(vec, 0.0, (a, x) -> a + x * x))``
+    — x * x in the element type, summed left to right from 0.0 in
+    double — where the norm is > 0; Spark orders NaN above every
+    number, so a NaN norm divides too."""
+    sq = v * v
+    norm = np.zeros(len(v))
+    for d in range(v.shape[1]):
+        norm += sq[:, d]
+    norm = np.sqrt(norm)
+    out = v.astype(np.float64)
+    scale = (norm > 0) | np.isnan(norm)
+    np.divide(out, norm[:, None], out=out, where=scale[:, None])
+    return out
+
+
+def _fold_dot(u: np.ndarray, items_t: np.ndarray) -> np.ndarray:
+    """(users x items) dots against the (dim x items) matrix, each folded
+    over the dimensions left to right from 0.0 — the IEEE order of
+    ``aggregate(zip_with(u, i, *), 0.0, +)``, so scores are bit-identical
+    to the engine's (BLAS and np.sum reorder the additions)."""
+    s = np.zeros((len(u), items_t.shape[1]))
+    term = np.empty_like(s)
+    for d in range(len(items_t)):
+        np.multiply(u[:, d, None], items_t[d], out=term)
+        s += term
+    return s
+
+
+def _sorted_ids(ids: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(ids ascending in their own type — bigint numerically, string
+    bytewise, as Spark orders them — and the sorting permutation)."""
+    raw = ids.to_numpy(zero_copy_only=False)
+    order = np.argsort(raw, kind="stable")
+    return raw[order], order
 
 
 def topk_by_cosine(
@@ -323,60 +303,76 @@ def topk_by_cosine(
     item_vecs: DataFrame,
     k: int,
     train: DataFrame | None = None,
-    over_fetch: int | None = None,
     all_recs: bool = False,
 ) -> DataFrame:
     """O3/M6: exact cosine top-k of items per user, then J6/O4.
 
     ``user_vecs``: (user_id, vec array<float/double>), ``item_vecs``:
-    (item_id, vec). Vectors are L2-normalized once; similarity is a
-    zip_with dot product — JVM-side, no Python.
+    (item_id, vec), one vector length. Returns (user_id, item_id, rank
+    int) in the input id types: per user the k best items the user did
+    not rate in ``train`` (every one with ``all_recs``), by score desc
+    (NaN first, as Spark orders it), then item_id asc.
 
-    Exact crossJoin is O(U x I) — parity/testing path. At scale swap in
-    similarity.cosine_lsh_topk.
+    The vectors and the train pairs are collected through Arrow and
+    scored on the driver by one blocked numpy kernel, as MLlib's
+    ``Word2VecModel.findSynonyms`` scores its driver-held vectors.
+    Every sum folds in the order of the engine's
+    ``aggregate(zip_with(...))``, so scores and ties are bit-identical
+    to the Spark expressions and to the DuckDB oracle (REC_FIXED_SQL);
+    masking rated items before ranking yields the rows of the
+    over-fetch -> anti-join -> truncate contract. O(U x I) on bounded
+    vectors — the scale path is :func:`topk_by_cosine_lsh`.
     """
-    def normed(df: DataFrame, idc: str) -> DataFrame:
-        # materialize the O(dim) norm in a projection BEFORE the
-        # per-element division lambda — an aggregate referenced inside
-        # a transform lambda re-evaluates per element (O(dim^2)/row;
-        # same pitfall functions/text.ngrams_from_tokens documents)
-        staged = df.select(
-            idc,
-            "vec",
-            F.sqrt(F.aggregate("vec", F.lit(0.0), lambda a, x: a + x * x)).alias("_norm"),
-        )
-        return staged.select(
-            idc,
-            F.when(
-                F.col("_norm") > 0,
-                F.transform("vec", lambda x: x / F.col("_norm")),
-            ).otherwise(F.col("vec")).alias("vec"),
-        )
+    u_field = user_vecs.schema["user_id"]
+    i_field = item_vecs.schema["item_id"]
+    u_arrow, uv = _collect_vecs(user_vecs, "user_id")
+    i_arrow, iv = _collect_vecs(item_vecs, "item_id")
+    n_users, n_items = len(uv), len(iv)
+    if n_users and n_items and uv.shape[1] != iv.shape[1]:
+        raise ValueError(f"vector lengths differ: users {uv.shape[1]}, items {iv.shape[1]}")
+    # ids sorted for the lookups below; items in id order also let a
+    # stable sort on score alone break score ties by item_id
+    u_ids, u_order = _sorted_ids(u_arrow)
+    i_ids, i_order = _sorted_ids(i_arrow)
+    uv = _l2_normalised(uv[u_order])
+    items_t = np.ascontiguousarray(_l2_normalised(iv[i_order]).T)
 
-    u = normed(user_vecs, "user_id")
-    it = normed(item_vecs, "item_id")
-    sim = F.aggregate(
-        F.zip_with(F.col("u.vec"), F.col("i.vec"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    # rated (user, item) cells as sorted flat indices user * n_items + item;
+    # pairs of users or items without a vector drop out on the driver
+    rated = np.zeros(0, np.int64)
+    if train is not None and n_users and n_items:
+        pairs = train.select(
+            F.col("user_id").cast(u_field.dataType),
+            F.col("item_id").cast(i_field.dataType),
+        ).dropna().toArrow()
+        pu, pi = (pairs.column(c).to_numpy() for c in ("user_id", "item_id"))
+        ru = np.minimum(np.searchsorted(u_ids, pu), n_users - 1)
+        ri = np.minimum(np.searchsorted(i_ids, pi), n_items - 1)
+        known = (u_ids[ru] == pu) & (i_ids[ri] == pi)
+        rated = np.unique(ru[known].astype(np.int64) * n_items + ri[known])
+
+    width = n_items if all_recs else max(0, min(k, n_items))
+    picked = [np.zeros((3, 0), np.int64)]  # (user, item, rank) per block
+    for b0 in range(0, n_users, _USER_BLOCK):
+        b1 = min(b0 + _USER_BLOCK, n_users)
+        key = np.negative(_fold_dot(uv[b0:b1], items_t))
+        # scores of normalised vectors are finite or NaN, so -inf puts
+        # NaN first and +inf puts rated items after every candidate
+        key[np.isnan(key)] = -np.inf
+        lo, hi = np.searchsorted(rated, [b0 * n_items, b1 * n_items])
+        cells = rated[lo:hi] - b0 * n_items
+        key.flat[cells] = np.inf
+        order = np.argsort(key, axis=1, kind="stable")[:, :width]
+        unrated = n_items - np.bincount(cells // n_items, minlength=b1 - b0)
+        r, c = np.nonzero(np.arange(width) < np.minimum(width, unrated)[:, None])
+        picked.append(np.stack([u_order[b0 + r], i_order[order[r, c]], c + 1]))
+    u_idx, i_idx, rank = np.concatenate(picked, axis=1)
+    recs = pa.table(
+        {
+            "user_id": u_arrow.take(u_idx),
+            "item_id": i_arrow.take(i_idx),
+            "rank": pa.array(rank, pa.int32()),
+        }
     )
-    scored = (
-        u.alias("u")
-        .crossJoin(it.alias("i"))
-        .select(F.col("u.user_id"), F.col("i.item_id"), sim.alias("score"))
-    )
-    if train is not None:
-        if all_recs:
-            # every unseen item stays ranked — no over-fetch prefilter
-            return exclude_rated_and_truncate(scored, train, k, all_recs=True)
-        n_fetch = (over_fetch or max_user_degree(train)) + k
-        w = Window.partitionBy("user_id").orderBy(F.desc("score"), "item_id")
-        scored = scored.withColumn("_r", F.row_number().over(w)).filter(
-            F.col("_r") <= n_fetch
-        ).drop("_r")
-        return exclude_rated_and_truncate(scored, train, k)
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), "item_id")
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if not all_recs:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked.select("user_id", "item_id", "rank")
+    schema = StructType([u_field, i_field, StructField("rank", IntegerType(), False)])
+    return user_vecs.sparkSession.createDataFrame(recs, schema)

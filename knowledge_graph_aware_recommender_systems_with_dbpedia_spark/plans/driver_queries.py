@@ -2168,8 +2168,9 @@ def _fixed_vec(idc: str, dim: int = _FE_DIM):
 
 def rec_fixed_emb_top5(spark, sf_dir):
     """M3/M6 + O3 + J6/O4, deterministic: the embedding recommenders'
-    ENTIRE scoring plan (zero-fill vocabulary lookup -> L2-normalize ->
-    cosine -> over-fetch window -> anti-join rated -> truncate to 5)
+    ENTIRE scoring path (zero-fill vocabulary lookup -> L2-normalize ->
+    cosine -> drop rated -> top 5, the rows of the over-fetch ->
+    anti-join -> truncate contract; scored on the driver when called)
     with FIXED hash-derived vectors instead of trained ones, so a
     DuckDB oracle can hash-check it. Items with item_id % 7 == 0
     simulate vocabulary misses and get zero-filled vectors (score 0,
@@ -2180,9 +2181,9 @@ def rec_fixed_emb_top5(spark, sf_dir):
     train, _ = SP.train_test(_user_split(spark, sf_dir))
     train_ui = train.select("user_id", "item_id")
     # deterministic user subset (the ss1 vec_id<8 pattern): the exact
-    # crossJoin scorer is the parity path — bench/oracle exercise it on
-    # ~2% of users; the full-population scale path is LSH (rec_* via
-    # scoring='lsh')
+    # driver-kernel scorer is the O(U x I) small-regime path — bench/
+    # oracle exercise it on ~2% of users; the full-population scale path
+    # is LSH (rec_* via scoring='lsh')
     users = train_ui.select("user_id").distinct().filter(
         F.pmod(F.col("user_id"), F.lit(50)) == 0
     )

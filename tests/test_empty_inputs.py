@@ -61,6 +61,33 @@ def test_similarity_ops_on_empty(spark, empty_emb):
     assert SIM.ivf_topk(empty_emb, empty_emb).count() == 0
 
 
+def test_topk_by_cosine_on_empty(spark):
+    """An empty user, item or train frame yields the (user_id, item_id,
+    rank) frame with the input id types — empty unless only train is."""
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.recommend import (
+        topk_by_cosine,
+    )
+
+    for id_type, uid, iid in (("bigint", 1, 2), ("string", "u", "i")):
+        def frame(rows, id_col):
+            return spark.createDataFrame(rows, f"{id_col} {id_type}, vec array<double>")
+
+        uv, iv = frame([(uid, [1.0, 0.0])], "user_id"), frame([(iid, [0.5, 0.5])], "item_id")
+        train = spark.createDataFrame([(uid, iid)], f"user_id {id_type}, item_id {id_type}")
+        empty_train = spark.createDataFrame([], f"user_id {id_type}, item_id {id_type}")
+        want = [("user_id", id_type), ("item_id", id_type), ("rank", "int")]
+        for users, items, tr, n in (
+            (frame([], "user_id"), iv, train, 0),
+            (uv, frame([], "item_id"), train, 0),
+            (frame([], "user_id"), frame([], "item_id"), empty_train, 0),
+            (uv, iv, empty_train, 1),
+            (uv, iv, train, 0),  # the only item is rated
+        ):
+            recs = topk_by_cosine(users, items, k=5, train=tr)
+            assert recs.dtypes == want
+            assert recs.count() == n
+
+
 def test_range_join_ops_on_empty(spark):
     from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.operators.rangejoin import (
         interval_overlap_join,

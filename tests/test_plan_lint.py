@@ -177,7 +177,6 @@ NLJ_ALLOWED = {
     # aggregate (per-user candidate arrays / global top-k candidate
     # table) — the recommend.py scoring contract
     "rec_popularity_top5": 2,
-    "rec_fixed_emb_top5": 2,
     "rec_rrf_top5": 2,
     "e2_map_at_5": 2,
     "e3_ndcg_at_5": 2,

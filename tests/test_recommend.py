@@ -1,3 +1,7 @@
+import math
+from collections import Counter
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,68 +114,115 @@ def test_all_recs_rejected_on_lsh_scoring():
         Node2VecRecommender(scoring="lsh", all_recs=True)
 
 
-@pytest.mark.slow
-def test_topk_by_cosine_broadcast_equals_windowed(spark):
-    """The zero-shuffle broadcast-array scorer must be row-for-row
-    identical to the windowed crossJoin scorer (same dots, same
-    (score desc, item) order, same anti-join semantics), including
-    zero vectors and users whose top items are all rated."""
-    import numpy as np
+def _reference_topk(users, items, k, train=None, all_recs=False, single=False):
+    """The scoring contract in plain Python: L2-normalise rows whose norm
+    is > 0 (NaN counts, as Spark orders it), fold every sum left to
+    right from 0.0, rank by (score desc with NaN first, item asc),
+    over-fetch max_user_degree + k, anti-join the rated pairs, re-rank
+    and truncate to k. ``single``: the vectors are array<float>, whose
+    squares the engine takes in float32."""
 
-    rng = np.random.RandomState(17)
-    users = [(f"u{i}", [float(x) for x in rng.randn(6)]) for i in range(25)]
-    users.append(("uz", [0.0] * 6))  # zero vector
-    items = [(f"i{j}", [float(x) for x in rng.randn(6)]) for j in range(40)]
-    items.append(("iz", [0.0] * 6))
-    uv = spark.createDataFrame(users, "user_id string, vec array<double>")
-    iv = spark.createDataFrame(items, "item_id string, vec array<double>")
-    train_rows = [
-        (f"u{i}", f"i{j}") for i in range(25) for j in rng.choice(41, 5, replace=False)
-    ] + [("uz", "i0")]
-    train = spark.createDataFrame(
-        [(u, i if i != "i40" else "iz") for u, i in train_rows],
-        "user_id string, item_id string",
-    )
-    for k in (3, 7):
-        want = {
-            (r.user_id, r.rank): r.item_id
-            for r in RC.topk_by_cosine(uv, iv, k=k, train=train).collect()
-        }
-        got = {
-            (r.user_id, r.rank): r.item_id
-            for r in RC.topk_by_cosine_broadcast(uv, iv, k=k, train=train).collect()
-        }
-        assert got == want
-    # all_recs parity too
-    want = {
-        (r.user_id, r.rank): r.item_id
-        for r in RC.topk_by_cosine(uv, iv, k=1, train=train, all_recs=True).collect()
-    }
-    got = {
-        (r.user_id, r.rank): r.item_id
-        for r in RC.topk_by_cosine_broadcast(uv, iv, k=1, train=train, all_recs=True).collect()
-    }
-    assert got == want
+    def normed(v):
+        n = 0.0
+        for x in v:
+            n = n + (float(np.float32(x) * np.float32(x)) if single else x * x)
+        n = math.sqrt(n)
+        return [x / n for x in v] if n > 0 or math.isnan(n) else list(v)
+
+    def dot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s = s + x * y
+        return s
+
+    def ranked(scored):
+        return sorted(scored, key=lambda t: (not math.isnan(t[0]), 0.0 if math.isnan(t[0]) else -t[0], t[1]))
+
+    rated = set(train or [])
+    n_fetch = max(Counter(u for u, _ in train or []).values(), default=0) + k
+    items = [(i, normed(v)) for i, v in items]
+    out = {}
+    for u, v in users:
+        cand = ranked([(dot(normed(v), iv), i) for i, iv in items])
+        if train is not None and not all_recs:
+            cand = cand[:n_fetch]
+        cand = [i for _, i in cand if (u, i) not in rated]
+        out.update({(u, r + 1): i for r, i in enumerate(cand if all_recs else cand[:k])})
+    return out
 
 
-def test_topk_by_cosine_broadcast_zero_shuffle_scoring(spark):
-    """The scoring stage must be map-side only: no exchange between the
-    broadcast item join and the per-user slice (the only exchanges in
-    the whole plan feed the two tiny per-user/global aggregates)."""
-    uv = spark.createDataFrame([("u1", [1.0, 0.0])], "user_id string, vec array<double>")
-    iv = spark.createDataFrame(
-        [("i1", [1.0, 0.0]), ("i2", [0.0, 1.0])], "item_id string, vec array<double>"
+# item vectors: exact ties (9, 10, 100 share one vector; so do 3 and 30),
+# a zero vector, a NaN vector, and ids whose numeric and string orders
+# differ (9 < 10 < 100 as numbers, "10" < "100" < "9" as strings)
+_ITEMS = [
+    (9, [1.0, 1.0, 0.0]), (10, [1.0, 1.0, 0.0]), (100, [1.0, 1.0, 0.0]),
+    (11, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [0.0, 1.0, 0.0]),
+    (30, [0.0, 1.0, 0.0]), (4, [-1.0, 0.0, 0.5]), (5, [0.3, -0.2, 0.9]),
+    (6, [float("nan"), 0.0, 1.0]), (7, [0.25, 0.5, -0.125]),
+]
+_USERS = [
+    (1, [2.0, 2.0, 0.0]),   # nearest items 9/10/100 (+ NaN 6) all rated
+    (2, [0.0, 0.0, 0.0]),   # zero vector: every score 0, order by id
+    (3, [1.0, 0.1, 0.0]),   # rated all but two items: fewer than k unseen
+    (4, [0.1, 1.0, 0.2]),
+    (5, [-0.5, 0.3, 0.7]),
+    (6, [1e-200, 0.0, 0.0]),  # squares underflow: norm 0, kept as is
+    (7, [0.3, 0.3, 0.3]),
+]
+_TRAIN = [(1, 9), (1, 10), (1, 100), (1, 6), (4, 3), (4, 3), (5, 4), (8, 2)] + [
+    (3, i) for i, _ in _ITEMS if i not in (2, 5)
+]
+
+
+@pytest.mark.parametrize(
+    "id_type,elem,block",
+    [("bigint", "double", 256), ("string", "double", 3), ("string", "float", 256), ("bigint", "float", 2)],
+)
+def test_topk_by_cosine_matches_reference_contract(spark, monkeypatch, id_type, elem, block):
+    """The numpy kernel returns the rows of the reference contract in
+    plain Python: (score desc, NaN first, item asc) with ties in the id
+    column's own type, rated items masked, fewer than k rows when fewer
+    remain — across several user blocks when ``block`` is small."""
+    monkeypatch.setattr(RC, "_USER_BLOCK", block)
+    cast = str if id_type == "string" else int
+    single = elem == "float"
+    users = [(cast(u), [float(np.float32(x)) for x in v] if single else v) for u, v in _USERS]
+    items = [(cast(i), [float(np.float32(x)) for x in v] if single else v) for i, v in _ITEMS]
+    train_rows = [(cast(u), cast(i)) for u, i in _TRAIN]
+    uv = spark.createDataFrame(users, f"user_id {id_type}, vec array<{elem}>")
+    iv = spark.createDataFrame(items, f"item_id {id_type}, vec array<{elem}>")
+    train = spark.createDataFrame(train_rows, f"user_id {id_type}, item_id {id_type}")
+    for k, kw, ref_kw in (
+        (3, {"train": train}, {"train": train_rows}),
+        (1, {"train": train, "all_recs": True}, {"train": train_rows, "all_recs": True}),
+        (4, {}, {}),
+        (1, {"all_recs": True}, {"all_recs": True}),
+    ):
+        recs = RC.topk_by_cosine(uv, iv, k=k, **kw)
+        assert recs.dtypes == [("user_id", id_type), ("item_id", id_type), ("rank", "int")]
+        got = {(r.user_id, r.rank): r.item_id for r in recs.collect()}
+        assert got == _reference_topk(users, items, k, single=single, **ref_kw), (k, kw)
+
+
+def test_rec_fixed_emb_top5_matches_duckdb_oracle(spark, monkeypatch):
+    """The registry's fixed-vector run of the embedding recommenders'
+    scoring path agrees row for row with its DuckDB oracle (bit-exact
+    scores, so the tie-breaks agree too) at sf0.001."""
+    import os
+
+    from scripts import check_correctness as CC
+    from knowledge_graph_aware_recommender_systems_with_dbpedia_spark.plans.driver_queries import (
+        REC_FIXED_SQL,
+        rec_fixed_emb_top5,
     )
-    train = spark.createDataFrame([("u1", "i1")], "user_id string, item_id string")
-    plan = (
-        RC.topk_by_cosine_broadcast(uv, iv, k=1, train=train)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # windowed scorer has per-user hashpartitioning exchanges + sort-
-    # merge anti-join; the broadcast plan must have NO window and no
-    # user_id, item_id anti-join exchange
-    assert "Window" not in plan
-    assert "LeftAnti" not in plan
+
+    sf = os.path.join(os.path.dirname(CC.SF_DIR), "sf0.001")
+    monkeypatch.setattr(CC, "SF_DIR", sf)
+    got = rec_fixed_emb_top5(spark, sf).toPandas()
+    con = CC.duck_conn()
+    want = con.sql(REC_FIXED_SQL).df()
+    assert len(got) > 0
+    assert CC.compare("rec_fixed_emb_top5", got, want) == []
 
 
 def test_salted_join_equals_plain_join(spark):
